@@ -1,0 +1,10 @@
+"""Lets the benchmark's tests import its modules and the package the
+same way ``perfbench/run.py`` does."""
+
+import os
+import sys
+
+HERE = os.path.dirname(os.path.abspath(__file__))
+for path in (HERE, os.path.dirname(HERE)):
+    if path not in sys.path:
+        sys.path.insert(0, path)
