@@ -1,6 +1,8 @@
 """Bench harness (driver contract): runs the headline queries at
 $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
-local[$SPARK_GRAFT_CPUS] and prints ONE JSON line.
+local[$SPARK_GRAFT_CPUS] (default: the CPUs this process may run on) with
+a driver heap of $SPARK_GRAFT_DRIVER_MEM (default: physical RAM / 8) and
+prints ONE JSON line.
 
 Headline = the flagship kernel-extraction pipeline (the engine's reason
 to exist) + the scale-relevant operators (minhash-LSH dedup, jaccard
@@ -161,9 +163,20 @@ def wait_for_cotenant_quiet(max_cpus: float, timeout_s: float) -> float:
         time.sleep(4)
 
 
+def host_defaults() -> tuple[int, str]:
+    """local[N] width and driver heap sized to this host: N is the
+    process's CPU affinity (what nproc prints), the heap an eighth of
+    physical RAM, as perfbench sizes its session. SPARK_GRAFT_CPUS and
+    SPARK_GRAFT_DRIVER_MEM override them."""
+    ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    return len(os.sched_getaffinity(0)), f"{max(1024, ram_mb // 8)}m"
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    host_cpus, host_mem = host_defaults()
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", host_cpus))
+    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", host_mem)
     attempts = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_ATTEMPTS", "2")))
     gate_max = float(os.environ.get("SPARK_GRAFT_BENCH_GATE", "4.0"))
     gate_timeout = int(os.environ.get("SPARK_GRAFT_BENCH_GATE_TIMEOUT", "300"))
@@ -175,7 +188,7 @@ def main() -> None:
         shuffle_partitions=cpus,
         extra_confs={
             "spark.ui.enabled": "false",
-            "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"),
+            "spark.driver.memory": driver_mem,
         },
     )
     spark.sparkContext.setLogLevel("ERROR")
@@ -252,6 +265,7 @@ def main() -> None:
         "queries": results,
         "sf": sf,
         "cpus": cpus,
+        "driver_memory": driver_mem,
         "extracted_turns": n_turns,
         "extract_turns_per_sec": round(n_turns / results["extract_full_pipeline"], 1)
         if n_turns

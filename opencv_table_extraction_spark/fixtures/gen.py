@@ -9,9 +9,15 @@ ts:timestamp) — plus two sidecar truth tables:
 
 ``expected_text`` is computed INDEPENDENTLY of the extraction kernel
 (plain string joins over the constructed content), so per-turn equality
-is a real end-to-end check of parse→render→binarize→morphology→
-detect→order→span→assemble. Only geometry spans (which are definitionally
-the shared layout contract) come from kernel/render.layout_table.
+is a real end-to-end check of whichever table route runs: on the default
+Otsu route that is parse→layout→closed-form assembly (the image chain only
+for turns whose noise specks cluster), on the adaptive route
+(``use_adaptive=True``) it is parse→render→binarize→morphology→detect→
+order→span→assemble. The image chain itself stays checked by
+tests/test_grid_recovery.py (its ``*_image_chain`` tests) and by
+tests/test_closed_form.py, which compares the two routes row for row.
+Only geometry spans (which are definitionally the shared layout contract)
+come from kernel/render.layout_table.
 
 Route mix per FIXTURES.md: 25% pipe-table, 25% HTML, 10% scan
 (handwriting-vs-signature router cases, test2.py:3-5), 40% plain.

@@ -29,9 +29,22 @@ from .imaging import (
     otsu_threshold,
     to_gray,
 )
-from .render import LINE_T, classify_payload, parse_pipe_table, render_table
+from .render import (
+    LINE_T,
+    classify_payload,
+    layout_table,
+    noise_specks,
+    parse_pipe_table,
+    render_table,
+)
 
-__all__ = ["extract_turn", "extract_batch", "OUT_FIELDS", "arrow_out_schema"]
+__all__ = [
+    "extract_turn",
+    "extract_table_image_chain",
+    "extract_batch",
+    "OUT_FIELDS",
+    "arrow_out_schema",
+]
 
 _SPAN_STRUCT = pa.struct(
     [
@@ -68,15 +81,121 @@ def arrow_out_schema() -> pa.Schema:
     return pa.schema(OUT_FIELDS)
 
 
+def _plain_row(text: str) -> dict:
+    return {"route": "plain", "extracted_text": text.strip(), "spans": [],
+            "n_rows": 0, "n_cols": 0, "n_cells": 0, "n_joints": 0, "err": ""}
+
+
+# Two speck origins within this many px in BOTH axes void the closed
+# form's proof (two adjacent 2x2 specks can fill a 4 px dash inset and
+# chain a line into a dash, a >= 9 px run); such turns take the image
+# chain.
+SPECK_CLEARANCE = 4
+
+
+def _specks_isolated(specks: list[tuple[int, int]]) -> bool:
+    for i, (xa, ya) in enumerate(specks):
+        for xb, yb in specks[i + 1:]:
+            if abs(xa - xb) <= SPECK_CLEARANCE and abs(ya - yb) <= SPECK_CLEARANCE:
+                return False
+    return True
+
+
+def _noise_seed(text: str) -> int:
+    # deterministic per-payload noise seed (process-independent: crc32,
+    # not Python hash(), which varies with PYTHONHASHSEED)
+    return zlib.crc32(text.encode("utf-8"))
+
+
+def _closed_form_layout(text: str, pt) -> np.ndarray | None:
+    """The layout rects when the closed form's proof covers this turn (its
+    noise specks are pairwise isolated), else None: the one rule that
+    sends an Otsu-route table turn to the closed form or the image chain."""
+    H, W, layout_rects = layout_table(pt)
+    specks = noise_specks(_noise_seed(text), H, W)
+    return layout_rects if _specks_isolated(specks) else None
+
+
 def _extract_table(text: str, use_adaptive: bool) -> dict:
     pt = parse_pipe_table(text)
     if pt is None:  # classified table but unparseable -> plain fallback
-        return {"route": "plain", "extracted_text": text.strip(), "spans": [],
-                "n_rows": 0, "n_cols": 0, "n_cells": 0, "n_joints": 0, "err": ""}
-    # deterministic per-payload noise seed (process-independent: crc32,
-    # not Python hash(), which varies with PYTHONHASHSEED)
-    seed = zlib.crc32(text.encode("utf-8"))
-    img, layout_rects = render_table(pt, noise_seed=seed)
+        return _plain_row(text)
+    if not use_adaptive:
+        layout_rects = _closed_form_layout(text, pt)
+        if layout_rects is not None:
+            return _table_closed_form(text, pt, layout_rects)
+    return _table_image_chain(text, pt, use_adaptive)
+
+
+def extract_table_image_chain(text: str) -> dict:
+    """The Otsu table route with the image chain forced (no closed form):
+    the oracle the closed form is tested against (tests/test_closed_form.py,
+    tools/check_closed_form.py). Expects a table-classified payload."""
+    pt = parse_pipe_table(text)
+    if pt is None:
+        return _plain_row(text)
+    return _table_image_chain(text, pt, False)
+
+
+def _table_closed_form(text: str, pt, layout_rects: np.ndarray) -> dict:
+    """The Otsu route's output row computed from the layout alone — what
+    the image chain would recover, without rendering a pixel.
+
+    Exactness, for turns whose N_SPECKS noise specks are pairwise
+    isolated (no two origins within SPECK_CLEARANCE px in both axes,
+    ``_closed_form_layout``; other turns take the image chain):
+
+    - Grid lines span the whole table, so every line is longer than
+      either structuring element (k = max(9, dim // 20) is under the
+      table's width and height), and the opens keep every line pixel.
+    - Glyph dashes sit >= DASH_INSET (4) px inside each interior
+      (checked at import in kernel/render.py). Their runs are <= 3 px
+      wide and 2 px tall, 3 px apart.
+    - A 2 px speck cannot bridge a >= 3 px gap, and isolated specks
+      share a run only across one dash, so every run through a speck is
+      at most 7 px wide (speck + dash + speck) and 4 px tall (speck +
+      dash rows, or speck + line rows), under min_k = 9: the opens
+      remove the specks. The one exception is a speck on a line's end,
+      which extends that line into the margin. Those pixels lie in one
+      line mask only, so they add no joint, and they touch the border
+      component of the grid complement, so they enclose no region.
+    - So the joints are exactly the (R+1)*(C+1) 2x2 line crossings
+      (area LINE_T**2, each counted), and the grid-mask complement's
+      inner components are exactly the layout interiors (each >= 8 x 12
+      px, above detect_cells' size filters).
+    - order_cells' row gap (median height / 2 = 6) is under the row
+      pitch (CELL_H + LINE_T = 14) and a row's cells share one y, so
+      each cell's (row, col) is its layout index. Each center lies in
+      exactly one layout rect, so every cell matches and err is "".
+    """
+    cells = pt.cells
+    C = pt.n_cols
+    spans = [
+        {"row": c.row, "col": c.col, "x": x, "y": y, "w": w, "h": h,
+         "start": c.start, "end": c.end}
+        for c, (x, y, w, h) in zip(cells, layout_rects.tolist())
+    ]
+    lines = [
+        "\t".join([text[c.start : c.end] for c in cells[i : i + C]])
+        for i in range(0, len(cells), C)
+    ]
+    return {
+        "route": "table",
+        "extracted_text": "\n".join(lines),
+        "spans": spans,
+        "n_rows": pt.n_rows,
+        "n_cols": C,
+        "n_cells": len(spans),
+        "n_joints": (pt.n_rows + 1) * (C + 1),
+        "err": "",
+    }
+
+
+def _table_image_chain(text: str, pt, use_adaptive: bool) -> dict:
+    """Render → threshold → morphology → components → match: recover the
+    cells from pixels. The adaptive route always runs it; the Otsu route
+    runs it when the closed form's proof does not cover the turn."""
+    img, layout_rects = render_table(pt, noise_seed=_noise_seed(text))
     gray = to_gray(img)
     if use_adaptive:
         bin_img = adaptive_threshold(gray)
@@ -158,8 +277,7 @@ def extract_turn(text: str, use_adaptive: bool = False) -> dict:
                 "extracted_text": router_mod.transcribe(mode, transcript),
                 "spans": [], "n_rows": 0, "n_cols": 0, "n_cells": 0,
                 "n_joints": 0, "err": ""}
-    return {"route": "plain", "extracted_text": text.strip(), "spans": [],
-            "n_rows": 0, "n_cols": 0, "n_cells": 0, "n_joints": 0, "err": ""}
+    return _plain_row(text)
 
 
 def extract_batch(

@@ -5,12 +5,20 @@ every cell's text inside the source turn* from a markdown/pipe table.
 ``render_table`` paints a deterministic document image for it: black grid
 lines on a white canvas, plus dashed "glyph" ink strokes inside cells
 (dash run length < any structuring element, so morphological opening
-removes them exactly like real text), plus sub-``min_area`` noise specks.
+removes them exactly like real text), plus sub-``min_area`` noise specks
+placed by ``noise_specks``.
 
-The geometry is the shared layout contract: the downstream morphology
-pipeline must *recover* these cell rects from pixels alone; spans are then
-matched back by center containment (kernel/extract.py). The pipeline's
-correctness therefore rests on the imaging stages, not on this table.
+The geometry is the shared layout contract. On the image chain
+(kernel/extract.py: the adaptive route, and the Otsu route's fallback
+when two noise specks land close together) the morphology pipeline must
+*recover* these cell rects from pixels alone; spans are then matched back
+by center containment. The default Otsu route skips the image chain and
+emits the layout directly, which is exact because of the invariants this
+module keeps (grid lines longer than any structuring element, dashes
+inset ``DASH_INSET`` px inside every cell, 2x2 specks); the proof is in
+``kernel.extract._table_closed_form``. tests/test_closed_form.py checks
+the two against each other, and tests/test_grid_recovery.py runs the
+image chain on its own.
 
 Stage list provenance: BASELINE.json:6 "batched per-turn decode→render→
 morphology→cell-extract". The reference tree itself has no decode/render
@@ -30,6 +38,7 @@ __all__ = [
     "classify_payload",
     "parse_pipe_table",
     "layout_table",
+    "noise_specks",
     "render_table",
 ]
 
@@ -44,6 +53,27 @@ LINE_T = 2          # grid line thickness
 MARGIN = 8          # canvas margin around the outer border
 MIN_CELL_W = 16     # px floor for a column's interior width
 MAX_CANVAS = 2400   # hard cap on either canvas dimension
+DASH_INSET = 4      # min px between a glyph dash and its cell's grid lines
+N_SPECKS = 3        # 2x2 noise specks per rendered table
+
+
+def _check_dash_inset(cell_h: int) -> None:
+    """Every glyph dash render_table paints sits >= DASH_INSET px inside
+    its cell interior, hence inside the canvas; the closed form's
+    exactness proof (kernel/extract.py) relies on it. Horizontally it
+    holds by construction (dashes start DASH_INSET px in and are at most
+    the interior width minus 2 * DASH_INSET long); vertically a 2 px dash
+    at the interior's mid row leaves cell_h // 2 px above and
+    cell_h - cell_h // 2 - 2 px below."""
+    inset = min(cell_h // 2, cell_h - cell_h // 2 - 2)
+    if inset < DASH_INSET:
+        raise AssertionError(
+            f"glyph dash {inset} px from its cell's grid line (need >= "
+            f"{DASH_INSET}): CELL_H={cell_h} breaks the render invariant")
+
+
+_check_dash_inset(CELL_H)
+
 
 _PIPE_ROW = re.compile(r"^\s*\|.*\|\s*$")
 _SEP_ROW = re.compile(r"^\s*\|(?:\s*:?-{2,}:?\s*\|)+\s*$")
@@ -134,26 +164,28 @@ def layout_table(pt: ParsedTable) -> tuple[int, int, np.ndarray]:
     """Deterministic pixel layout. Returns (H, W, rects) where rects is
     int64 (n_rows*n_cols, 4) row-major (x, y, w, h) *interior* rects —
     i.e. the regions bounded by (exclusive of) the grid lines."""
-    col_w = np.full(pt.n_cols, MIN_CELL_W, dtype=np.int64)
+    R, C = pt.n_rows, pt.n_cols
+    widths = [MIN_CELL_W] * C
     for c in pt.cells:
-        col_w[c.col] = max(col_w[c.col], (len(c.text) + 2) * CHAR_W)
-    total_w = int(col_w.sum()) + (pt.n_cols + 1) * LINE_T
+        w = (len(c.text) + 2) * CHAR_W
+        if w > widths[c.col]:
+            widths[c.col] = w
+    col_w = np.array(widths, dtype=np.int64)
+    total_w = int(col_w.sum()) + (C + 1) * LINE_T
     scale = 1.0
     if total_w > MAX_CANVAS - 2 * MARGIN:
-        scale = (MAX_CANVAS - 2 * MARGIN - (pt.n_cols + 1) * LINE_T) / float(col_w.sum())
+        scale = (MAX_CANVAS - 2 * MARGIN - (C + 1) * LINE_T) / float(col_w.sum())
         col_w = np.maximum((col_w * scale).astype(np.int64), 8)
-    W = 2 * MARGIN + int(col_w.sum()) + (pt.n_cols + 1) * LINE_T
-    H = 2 * MARGIN + pt.n_rows * CELL_H + (pt.n_rows + 1) * LINE_T
-    xs = np.empty(pt.n_cols, dtype=np.int64)
-    acc = MARGIN + LINE_T
-    for c in range(pt.n_cols):
-        xs[c] = acc
-        acc += col_w[c] + LINE_T
-    rects = np.empty((pt.n_rows * pt.n_cols, 4), dtype=np.int64)
-    for r in range(pt.n_rows):
-        y = MARGIN + LINE_T + r * (CELL_H + LINE_T)
-        for c in range(pt.n_cols):
-            rects[r * pt.n_cols + c] = (xs[c], y, col_w[c], CELL_H)
+    W = 2 * MARGIN + int(col_w.sum()) + (C + 1) * LINE_T
+    H = 2 * MARGIN + R * CELL_H + (R + 1) * LINE_T
+    # interior left edges: each column starts one line past the previous
+    xs = MARGIN + LINE_T + np.cumsum(col_w + LINE_T) - (col_w + LINE_T)
+    ys = MARGIN + LINE_T + np.arange(R, dtype=np.int64) * (CELL_H + LINE_T)
+    rects = np.empty((R * C, 4), dtype=np.int64)
+    rects[:, 0] = np.tile(xs, R)
+    rects[:, 1] = np.repeat(ys, C)
+    rects[:, 2] = np.tile(col_w, R)
+    rects[:, 3] = CELL_H
     return H, W, rects
 
 
@@ -181,12 +213,14 @@ def render_table(pt: ParsedTable, noise_seed: int = 0) -> tuple[np.ndarray, np.n
         lens = np.fromiter(
             (len(c.text) for c in pt.cells), dtype=np.int64, count=n_cells_r
         )
-        npx = np.minimum(lens * CHAR_W, rects[:, 2] - 8)
+        npx = np.minimum(lens * CHAR_W, rects[:, 2] - 2 * DASH_INSET)
         valid = npx > 0
         if valid.any():
             npx_v = npx[valid]
-            x_v = rects[valid, 0] + 4
+            x_v = rects[valid, 0] + DASH_INSET
             cy_v = rects[valid, 1] + rects[valid, 3] // 2
+            # the scatter below indexes, it does not clip; the dashes stay
+            # DASH_INSET px inside their cells (_check_dash_inset)
             cnt = 3 * (npx_v // 6) + np.minimum(npx_v % 6, 3)
             starts = np.cumsum(cnt) - cnt
             k = np.arange(int(cnt.sum()), dtype=np.int64) - np.repeat(starts, cnt)
@@ -195,15 +229,27 @@ def render_table(pt: ParsedTable, noise_seed: int = 0) -> tuple[np.ndarray, np.n
             rows_px = np.repeat(cy_v, cnt)
             img[rows_px, cols] = 0
             img[rows_px + 1, cols] = 0
-    # deterministic noise specks (2x2 px, below min_area; removed by
-    # opens). Inline LCG (Numerical Recipes constants) instead of a
-    # RandomState: constructing one per turn costs more than the kernel's
-    # entire morphology on a compact canvas.
+    for nx, ny in noise_specks(noise_seed, H, W):
+        img[ny : ny + 2, nx : nx + 2] = 0
+    return img, rects
+
+
+def noise_specks(noise_seed: int, H: int, W: int) -> list[tuple[int, int]]:
+    """Top-left (x, y) of the N_SPECKS 2x2 noise specks ``render_table``
+    paints on an H x W canvas: below min_area, removed by the opens. The
+    closed form in kernel/extract.py reads the same positions to decide
+    whether its exactness proof covers a turn.
+
+    Inline LCG (Numerical Recipes constants) instead of a RandomState:
+    constructing one per turn costs more than the kernel's entire
+    morphology on a compact canvas. Origins lie in [1, W-5] x [1, H-5],
+    so a speck never touches the canvas border."""
     state = (noise_seed & 0x7FFFFFFF) or 1
-    for _ in range(3):
+    out = []
+    for _ in range(N_SPECKS):
         state = (state * 1664525 + 1013904223) & 0xFFFFFFFF
         nx = 1 + state % max(1, W - 5)
         state = (state * 1664525 + 1013904223) & 0xFFFFFFFF
         ny = 1 + state % max(1, H - 5)
-        img[ny : ny + 2, nx : nx + 2] = 0
-    return img, rects
+        out.append((nx, ny))
+    return out

@@ -468,7 +468,7 @@ FROM documents
 
 
 def repetition_stats_batch(texts) -> list[list[float]]:
-    """Per-document repetition metrics — the standard corpus quality
+    r"""Per-document repetition metrics — the standard corpus quality
     filters (Rae et al. "Gopher" 2021 §A.1.1; FineWeb/RefinedWeb reuse
     them) that the length/punct/stopword `quality_score` family cannot
     express:
